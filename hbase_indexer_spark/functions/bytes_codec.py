@@ -1,14 +1,18 @@
 """Big-endian byte[] <-> typed value codec (HBase ``Bytes.toXXX`` semantics).
 
-Reproduces the type surface of the reference's ByteArrayValueMappers
-(reference: hbase-indexer-engine/.../parse/ByteArrayValueMappers.java:33-126):
-``int long string boolean float double short bigdecimal``, all big-endian.
+The one home of the byte format: decoders, encoders and the value-mapper
+registry.  It reproduces the type surface of the reference's
+ByteArrayValueMappers (reference: hbase-indexer-engine/.../parse/
+ByteArrayValueMappers.java:33-126): ``int long string boolean float double
+short bigdecimal``, all big-endian, plus the ``bytes`` passthrough.
 
-Everything except ``bigdecimal`` is implemented as pure Catalyst column
-expressions (hex/conv/bit arithmetic) so decode stays inside whole-stage
-codegen — no Python in the hot path.  ``bigdecimal`` (4-byte BE scale +
-two's-complement unscaled bytes, org.apache.hadoop.hbase.util.Bytes.toBigDecimal)
-uses an Arrow-batched pandas UDF.
+Every built-in decoder except ``bigdecimal`` is a SQL-text template
+(hex/conv/bit arithmetic) over a SQL expression: ``F.expr`` parses a whole
+decode tree in one py4j round trip, and decode stays inside whole-stage
+codegen, with no Python in the hot path.  ``bigdecimal`` (4-byte BE scale +
+two's-complement unscaled bytes, org.apache.hadoop.hbase.util.Bytes.
+toBigDecimal) is an Arrow-batched pandas UDF, and custom mappers (U1) are
+user Column callables; those two are the only Column decoders.
 
 Decode failure semantics: the reference logs and drops a value that has the
 wrong byte length (ByteArrayValueMappers.java:154-164).  Here a wrong-length
@@ -29,93 +33,118 @@ _U32 = 4294967296  # 2**32
 _I32 = 2147483648  # 2**31
 
 
-def _unsigned_be(col: Column, nbytes: int) -> Column:
-    """Unsigned big-endian integer value of the first ``nbytes`` (<=4) bytes."""
-    assert nbytes <= 4
-    return F.conv(F.hex(col), 16, 10).cast("long")
+def _unsigned_be_sql(e: str) -> str:
+    """Unsigned big-endian integer value of <=4 bytes."""
+    return f"CAST(conv(hex({e}), 16, 10) AS BIGINT)"
 
 
-def _guard(col: Column, nbytes: int, out: Column) -> Column:
+def _guard_sql(e: str, nbytes: int, out: str) -> str:
     """NULL unless the binary value is exactly ``nbytes`` long (drop-on-error)."""
-    return F.when(F.length(col) == nbytes, out)
+    return f"CASE WHEN (length({e}) = {nbytes}) THEN {out} END"
 
 
-def decode_int(col: Column) -> Column:
-    u = _unsigned_be(col, 4)
-    signed = F.when(u >= _I32, u - _U32).otherwise(u)
-    return _guard(col, 4, signed.cast("int"))
+def _decode_int_sql(e: str) -> str:
+    u = _unsigned_be_sql(e)
+    signed = f"CASE WHEN ({u} >= {_I32}) THEN ({u} - {_U32}) ELSE {u} END"
+    return _guard_sql(e, 4, f"CAST({signed} AS INT)")
 
 
-def decode_short(col: Column) -> Column:
-    u = _unsigned_be(col, 2)
-    signed = F.when(u >= 32768, u - 65536).otherwise(u)
-    return _guard(col, 2, signed.cast("short"))
+def _decode_short_sql(e: str) -> str:
+    u = _unsigned_be_sql(e)
+    signed = f"CASE WHEN ({u} >= 32768) THEN ({u} - 65536) ELSE {u} END"
+    return _guard_sql(e, 2, f"CAST({signed} AS SMALLINT)")
 
 
-def _long_bits(col: Column) -> Column:
+def _long_bits_sql(e: str) -> str:
     """Signed 64-bit value of 8 big-endian bytes, via hi/lo 32-bit halves.
 
     shiftleft is a pure bit operation, so the high half lands in the sign
     bits and the result is the two's-complement value (ANSI-safe — no
     arithmetic overflow).
     """
-    h = F.hex(col)
-    hi = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
-    return F.shiftleft(hi, 32).bitwiseOR(lo)
+    hi = f"CAST(conv(substring(hex({e}), 1, 8), 16, 10) AS BIGINT)"
+    lo = f"CAST(conv(substring(hex({e}), 9, 8), 16, 10) AS BIGINT)"
+    return f"(shiftleft({hi}, 32) | {lo})"
 
 
-def decode_long(col: Column) -> Column:
-    return _guard(col, 8, _long_bits(col))
+def _decode_long_sql(e: str) -> str:
+    return _guard_sql(e, 8, _long_bits_sql(e))
 
 
-def decode_boolean(col: Column) -> Column:
+def _decode_boolean_sql(e: str) -> str:
     # Bytes.toBoolean: single byte, 0x00 = false, else true (-1 written by toBytes)
-    return _guard(col, 1, _unsigned_be(col, 1) != 0)
+    return _guard_sql(e, 1, f"(NOT ({_unsigned_be_sql(e)} = 0))")
 
 
-def decode_string(col: Column) -> Column:
-    return col.cast("string")
+def _decode_string_sql(e: str) -> str:
+    return f"CAST({e} AS STRING)"
 
 
-def decode_float(col: Column) -> Column:
+def _decode_float_sql(e: str) -> str:
     """IEEE-754 binary32 from 4 big-endian bytes, as arithmetic on the bits."""
-    u = _unsigned_be(col, 4)  # 0 .. 2**32-1
-    sign = F.when(u >= _I32, F.lit(-1.0)).otherwise(F.lit(1.0))
-    exp = F.shiftrightunsigned(u, 23).bitwiseAND(F.lit(255))
-    frac = u.bitwiseAND(F.lit(0x7FFFFF)).cast("double")
-    normal = sign * (F.lit(1.0) + frac / F.lit(float(1 << 23))) * F.pow(F.lit(2.0), (exp - 127).cast("double"))
-    subnormal = sign * frac * F.pow(F.lit(2.0), F.lit(-149.0))
-    special = F.when(frac == 0, sign * F.lit(float("inf"))).otherwise(F.lit(float("nan")))
-    out = (
-        F.when(exp == 255, special)
-        .when(exp == 0, subnormal)
-        .otherwise(normal)
-        .cast("float")
-    )
-    return _guard(col, 4, out)
+    u = _unsigned_be_sql(e)  # 0 .. 2**32-1
+    sign = f"CASE WHEN ({u} >= {_I32}) THEN -1.0D ELSE 1.0D END"
+    exp = f"(shiftrightunsigned({u}, 23) & 255)"
+    frac = f"CAST(({u} & 8388607) AS DOUBLE)"
+    normal = (f"(({sign} * (1.0D + ({frac} / {float(1 << 23)!r}D)))"
+              f" * power(2.0D, CAST(({exp} - 127) AS DOUBLE)))")
+    subnormal = f"(({sign} * {frac}) * power(2.0D, -149.0D))"
+    special = (f"CASE WHEN ({frac} = 0) THEN ({sign} * CAST('Infinity' AS DOUBLE))"
+               f" ELSE CAST('NaN' AS DOUBLE) END")
+    out = (f"CASE WHEN ({exp} = 255) THEN {special}"
+           f" WHEN ({exp} = 0) THEN {subnormal}"
+           f" ELSE {normal} END")
+    return _guard_sql(e, 4, f"CAST({out} AS FLOAT)")
 
 
-def decode_double(col: Column) -> Column:
+def _decode_double_sql(e: str) -> str:
     """IEEE-754 binary64 from 8 big-endian bytes.
 
     All steps are exact in double arithmetic for normal numbers (the
     fraction is a dyadic rational with <=52 significant bits), so the result
     is bit-exact with Java's Double.longBitsToDouble for normals/zeros.
     """
-    bits = _long_bits(col)
-    sign = F.when(bits < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-    exp = F.shiftrightunsigned(bits, 52).bitwiseAND(F.lit(0x7FF)).cast("int")
-    frac = bits.bitwiseAND(F.lit(0xFFFFFFFFFFFFF)).cast("double")
-    normal = sign * (F.lit(1.0) + frac / F.lit(float(1 << 52))) * F.pow(F.lit(2.0), (exp - 1023).cast("double"))
-    subnormal = sign * frac * F.pow(F.lit(2.0), F.lit(-1074.0))
-    special = F.when(frac == 0, sign * F.lit(float("inf"))).otherwise(F.lit(float("nan")))
-    out = (
-        F.when(exp == 2047, special)
-        .when(exp == 0, subnormal)
-        .otherwise(normal)
-    )
-    return _guard(col, 8, out)
+    bits = _long_bits_sql(e)
+    sign = f"CASE WHEN ({bits} < 0) THEN -1.0D ELSE 1.0D END"
+    exp = f"CAST((shiftrightunsigned({bits}, 52) & 2047) AS INT)"
+    frac = f"CAST(({bits} & 4503599627370495) AS DOUBLE)"
+    normal = (f"(({sign} * (1.0D + ({frac} / {float(1 << 52)!r}D)))"
+              f" * power(2.0D, CAST(({exp} - 1023) AS DOUBLE)))")
+    subnormal = f"(({sign} * {frac}) * power(2.0D, -1074.0D))"
+    special = (f"CASE WHEN ({frac} = 0) THEN ({sign} * CAST('Infinity' AS DOUBLE))"
+               f" ELSE CAST('NaN' AS DOUBLE) END")
+    return _guard_sql(e, 8,
+                      f"CASE WHEN ({exp} = 2047) THEN {special}"
+                      f" WHEN ({exp} = 0) THEN {subnormal}"
+                      f" ELSE {normal} END")
+
+
+def _decode_bytes_sql(e: str) -> str:
+    """``byte[]`` passthrough (ExtractHBaseCellsBuilder.java:147-155): no
+    conversion — for downstream commands like readAvroContainer."""
+    return e
+
+
+_DECODE_SQL = {
+    "int": _decode_int_sql,
+    "long": _decode_long_sql,
+    "string": _decode_string_sql,
+    "boolean": _decode_boolean_sql,
+    "float": _decode_float_sql,
+    "double": _decode_double_sql,
+    "short": _decode_short_sql,
+    "bytes": _decode_bytes_sql,
+}
+
+
+def decode_sql(type_name, e: str) -> str | None:
+    """SQL text applying the built-in decoder ``type_name`` to the SQL
+    expression ``e``; None when the type has no SQL form (the bigdecimal
+    pandas UDF, custom mappers, non-string type objects)."""
+    if not isinstance(type_name, str):
+        return None
+    fn = _DECODE_SQL.get(type_name)
+    return fn(e) if fn is not None else None
 
 
 def _decode_bigdecimal_bytes(b):
@@ -225,51 +254,8 @@ def encode_bigdecimal(col: Column) -> Column:
     return _encode_bigdecimal_udf(col)
 
 
-def decode_bytes(col: Column) -> Column:
-    """``byte[]`` passthrough (ExtractHBaseCellsBuilder.java:147-155): no
-    conversion — for downstream commands like readAvroContainer."""
-    return col
-
-
 def encode_bytes(col: Column) -> Column:
     return col.cast("binary")
-
-
-DECODERS = {
-    "int": decode_int,
-    "long": decode_long,
-    "string": decode_string,
-    "boolean": decode_boolean,
-    "float": decode_float,
-    "double": decode_double,
-    "short": decode_short,
-    "bigdecimal": decode_bigdecimal,
-    "bytes": decode_bytes,
-}
-
-ENCODERS = {
-    "int": encode_int,
-    "long": encode_long,
-    "string": encode_string,
-    "boolean": encode_boolean,
-    "float": encode_float,
-    "double": encode_double,
-    "short": encode_short,
-    "bigdecimal": encode_bigdecimal,
-    "bytes": encode_bytes,
-}
-
-SPARK_TYPES = {
-    "int": "int",
-    "long": "bigint",
-    "string": "string",
-    "boolean": "boolean",
-    "float": "float",
-    "double": "double",
-    "short": "smallint",
-    "bigdecimal": "decimal(38,18)",
-    "bytes": "binary",
-}
 
 
 # U1 — custom ByteArrayValueMapper registry: the reference loads any class
@@ -284,7 +270,8 @@ def register_value_mapper(name: str, fn) -> None:
 
 
 def known_type(type_name: str) -> bool:
-    return type_name in DECODERS or type_name in _CUSTOM_MAPPERS
+    return (type_name in _DECODE_SQL or type_name == "bigdecimal"
+            or type_name in _CUSTOM_MAPPERS)
 
 
 def is_custom_mapper(type_name) -> bool:
@@ -293,13 +280,14 @@ def is_custom_mapper(type_name) -> bool:
 
 def decoder_for(type_name: str):
     """Decoder lookup, mirroring ByteArrayValueMappers.getMapper dispatch
-    (ByteArrayValueMappers.java:106-126): built-ins first, then custom
-    mappers registered by name (the Class.forName analog); unknown names
-    raise."""
-    try:
-        return DECODERS[type_name]
-    except KeyError:
-        pass
+    (ByteArrayValueMappers.java:106-126): built-in names first (their
+    SQL-text template, ``str -> str``), then bigdecimal, then custom mappers
+    registered by name (the Class.forName analog) — those two are Column
+    callables; unknown names raise."""
+    if type_name in _DECODE_SQL:
+        return _DECODE_SQL[type_name]
+    if type_name == "bigdecimal":
+        return decode_bigdecimal
     try:
         return _CUSTOM_MAPPERS[type_name]
     except KeyError:

@@ -5,10 +5,15 @@ Operates on the canonical ``cells`` schema (FIXTURES.md §0):
     cells(table STRING, row STRING, family STRING, qualifier STRING,
           ts BIGINT, op STRING, value BINARY)
 
-Everything here is pure DataFrame composition — extraction compiles an
-IndexerConf into Catalyst column expressions (filter / array_sort /
-transform / element_at), so Catalyst gets full column-pruning and
-predicate-pushdown visibility and the row loop stays in whole-stage codegen.
+Extraction compiles an IndexerConf from SQL text: the target predicates,
+the cell selection (filter / array_sort / try_element_at over SQL lambdas)
+and the built-in decoders (functions/bytes_codec.py) are each rendered as
+one string that ``F.expr`` parses in a single py4j round trip.  The decode
+step is the only part that may leave SQL: custom U1 mappers (user Column
+callables) and bigdecimal (a pandas UDF) are applied as Columns to the
+SQL-selected value or array.  Catalyst sees plain expressions either way,
+so column pruning and predicate pushdown hold and the row loop stays in
+whole-stage codegen.
 
 Reference parity:
 - single-cell extract   -> SingleCellExtractor.java:41-48        (P1)
@@ -32,9 +37,13 @@ from hbase_indexer_spark.config.indexer_conf import (
     FieldDef,
     IndexerConf,
 )
-from hbase_indexer_spark.functions.bytes_codec import decoder_for, is_custom_mapper
+from hbase_indexer_spark.functions.bytes_codec import (
+    decode_bigdecimal_array,
+    decode_sql,
+    decoder_for,
+    is_custom_mapper,
+)
 from hbase_indexer_spark.functions.colmemo import memo
-from hbase_indexer_spark.functions.sqltext import decode_sql, qlit
 from hbase_indexer_spark.functions import unique_key as uk
 
 OP_PUT = "put"
@@ -53,37 +62,31 @@ def table_predicate(conf: IndexerConf, table: Column) -> Column:
     return table == F.lit(conf.table)
 
 
-def cell_matches(conf: IndexerConf, family: Column, qualifier: Column) -> Column:
+def qlit(s: str) -> str:
+    """Single-quoted SQL string literal.  Spark's parser unescapes
+    backslash sequences inside literals, so ``\\`` is escaped first, then
+    ``'`` is doubled."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def _target_sql(family: str, qualifier: str, prefix: bool, x: str = "") -> str:
+    """SQL predicate: does the cell (columns ``{x}family`` / ``{x}qualifier``)
+    hit the target ``family:qualifier``, or ``family:qualifier*`` when
+    ``prefix``?"""
+    p = f"({x}family = {qlit(family)})"
+    if not prefix:
+        return f"({p} AND ({x}qualifier = {qlit(qualifier)}))"
+    if qualifier:
+        return f"({p} AND startswith({x}qualifier, {qlit(qualifier)}))"
+    return p
+
+
+def target_match_sql(conf: IndexerConf) -> str:
     """Does a cell hit any extractor target? (isRelevantKV,
-    DefaultResultToSolrMapper.java:119-126)."""
-    preds = []
-    for fam, qual in sorted(conf.exact_targets()):
-        preds.append((family == fam) & (qualifier == qual))
-    for fam, prefix in sorted(conf.prefix_targets()):
-        p = family == fam
-        if prefix:
-            p = p & qualifier.startswith(prefix)
-        preds.append(p)
-    if not preds:
-        return F.lit(False)
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out
-
-
-def _cell_matches_sql(conf: IndexerConf) -> str:
-    """SQL text of :func:`cell_matches` over the canonical ``family`` /
-    ``qualifier`` columns — one parse instead of one py4j round trip per
-    operator (r10 #3; same OR-fold, same target ordering)."""
-    preds = []
-    for fam, qual in sorted(conf.exact_targets()):
-        preds.append(f"((family = {qlit(fam)}) AND (qualifier = {qlit(qual)}))")
-    for fam, prefix in sorted(conf.prefix_targets()):
-        p = f"(family = {qlit(fam)})"
-        if prefix:
-            p = f"({p} AND startswith(qualifier, {qlit(prefix)}))"
-        preds.append(p)
+    DefaultResultToSolrMapper.java:119-126), as SQL text over the canonical
+    ``family`` / ``qualifier`` columns."""
+    preds = [_target_sql(fam, qual, False) for fam, qual in sorted(conf.exact_targets())]
+    preds += [_target_sql(fam, prefix, True) for fam, prefix in sorted(conf.prefix_targets())]
     if not preds:
         return "false"
     out = preds[0]
@@ -96,18 +99,10 @@ def put_relevant_pred(conf: IndexerConf) -> Column:
     """The put-filter of the document builders — op = put AND the cell hits
     an extractor target.  Depends only on ``conf``, so compiled once per
     context (the builders run it per micro-batch), and parsed from SQL text
-    in ONE round trip (r10 #3: the Column fold cost ~530 py4j calls per
-    cold compile)."""
+    in ONE round trip."""
     return memo(("put_relevant", conf), lambda: F.expr(
-        f"((op = {qlit(OP_PUT)}) AND {_cell_matches_sql(conf)})"
+        f"((op = {qlit(OP_PUT)}) AND {target_match_sql(conf)})"
     ))
-
-
-def relevance_predicate(conf: IndexerConf, family: Column, qualifier: Column,
-                        op: Column) -> Column:
-    """F2 — an event/cell is relevant iff it matches a target or is a delete
-    (Indexer.java:297-311: deletes are always relevant)."""
-    return cell_matches(conf, family, qualifier) | op.isin(*DELETE_OPS)
 
 
 # ---------------------------------------------------------------------------
@@ -129,82 +124,65 @@ def latest_cells(cells: DataFrame, order_cols: tuple[str, ...] = ("ts",)) -> Dat
 # Field expression compiler
 # ---------------------------------------------------------------------------
 
-def _decode(fd: FieldDef, raw: Column) -> Column:
-    dec = decoder_for(fd.type) if isinstance(fd.type, str) else fd.type
-    if fd.params and is_custom_mapper(fd.type):
-        # U1 Configurable contract: a custom mapper with <param> config is
-        # called as fn(col, params_dict) (ConfigureUtil.java:1-33 analog);
-        # params on built-in types are config metadata only
-        return dec(raw, dict(fd.params))
-    return dec(raw)
+def _decode(fd: FieldDef, sel: str, each: str | None = None) -> Column:
+    """The decode step over SQL-selected cells, mirroring
+    ByteArrayValueMappers.getMapper dispatch.  With ``each`` None, ``sel``
+    is SQL text of one raw value; otherwise ``sel`` is an array of matched
+    cell structs and ``each`` the raw bytes of its element ``x``.
+
+    Built-in types decode as SQL text.  bigdecimal (a pandas UDF) and custom
+    U1 mappers (user Column callables) have no SQL form, so they are
+    applied as Columns to the SQL-selected value or array."""
+    ds = decode_sql(fd.type, sel if each is None else each)
+    if ds is not None:
+        return F.expr(ds if each is None else f"transform({sel}, x -> {ds})")
+    if each is not None and fd.type == "bigdecimal":
+        # a scalar UDF cannot be invoked inside a HOF lambda, so the raw
+        # byte arrays are selected in Catalyst and decoded in one Arrow
+        # batch (ByteArrayValueMappers.java:92-96: the mapper applies under
+        # any extractor, wildcards included)
+        return decode_bigdecimal_array(F.expr(f"transform({sel}, x -> {each})"))
+    fn = decoder_for(fd.type) if isinstance(fd.type, str) else fd.type
+    # U1 Configurable contract: a custom mapper with <param> config is
+    # called as fn(col, params_dict) (ConfigureUtil.java:1-33 analog);
+    # params on built-in types are config metadata only
+    args = (dict(fd.params),) if fd.params and is_custom_mapper(fd.type) else ()
+    if each is None:
+        return fn(F.expr(sel), *args)
+    if fd.source == SOURCE_QUALIFIER:
+        return F.transform(F.expr(sel), lambda c: fn(c["qualifier"].cast("binary"), *args))
+    return F.transform(F.expr(sel), lambda c: fn(c["value"], *args))
 
 
-def _decode_sql(fd: FieldDef, e: str) -> str | None:
-    """SQL text of :func:`_decode` over the SQL expression ``e``, or None
-    when the field needs the Column path (custom U1 mappers are arbitrary
-    callables, bigdecimal is a pandas UDF, non-string types are callables).
-    Mirrors ``_decode``'s dispatch; tests/test_sqltext.py pins result and
-    dtype equality per built-in type."""
-    if not isinstance(fd.type, str) or is_custom_mapper(fd.type):
-        return None
-    return decode_sql(fd.type, e)
-
-
-def field_expr(fd: FieldDef, cells_arr: Column) -> Column:
-    """Compile one FieldDef into an expression over a per-row
-    array<struct<family,qualifier,value>> (qualifier order restored by
-    array_sort, preserving the reference's sorted-prefix contract)."""
+def field_expr(fd: FieldDef, cells: str) -> Column:
+    """Compile one FieldDef into an expression over ``cells``, SQL text of a
+    per-row array<struct<family,qualifier,value>> (qualifier order restored
+    by array_sort, preserving the reference's sorted-prefix contract)."""
+    match = _target_sql(fd.family, fd.qualifier, fd.wildcard, "x.")
     if not fd.wildcard:
         # P1 single cell: 0-or-1 value
-        matched = F.filter(
-            cells_arr,
-            lambda c: (c["family"] == fd.family) & (c["qualifier"] == fd.qualifier),
-        )
-        return _decode(fd, F.try_element_at(matched, F.lit(1))["value"]).alias(fd.name)
+        return _decode(fd, f"try_element_at(filter({cells}, x -> {match}), 1).value").alias(fd.name)
 
-    def pred(c):
-        p = c["family"] == fd.family
-        if fd.qualifier:
-            p = p & c["qualifier"].startswith(fd.qualifier)
-        return p
-
-    matched = F.array_sort(F.filter(cells_arr, pred))  # struct sort => qualifier order
-    if fd.type == "bigdecimal":
-        # bigdecimal is the one pandas-UDF type, and a scalar UDF cannot be
-        # invoked inside a HOF lambda — so extract the raw byte arrays in
-        # Catalyst, then decode the whole array in one Arrow batch
-        # (ByteArrayValueMappers.java:92-96: the mapper applies under any
-        # extractor, wildcards included)
-        from hbase_indexer_spark.functions.bytes_codec import (
-            decode_bigdecimal_array,
-        )
-
-        if fd.source == SOURCE_QUALIFIER:
-            raw = F.transform(matched, lambda c: c["qualifier"].cast("binary"))
-        else:
-            raw = F.transform(matched, lambda c: c["value"])
-        values = decode_bigdecimal_array(raw)
-    elif fd.source == SOURCE_QUALIFIER:
-        # P3: index the qualifier bytes themselves
-        values = F.transform(matched, lambda c: _decode(fd, c["qualifier"].cast("binary")))
-    else:
-        # P2: values of all matching qualifiers, qualifier-sorted
-        values = F.transform(matched, lambda c: _decode(fd, c["value"]))
-
+    matched = f"array_sort(filter({cells}, x -> {match}))"  # struct sort => qualifier order
+    # P3 indexes the qualifier bytes themselves, P2 the values of all
+    # matching qualifiers, qualifier-sorted
+    raw = "CAST(x.qualifier AS BINARY)" if fd.source == SOURCE_QUALIFIER else "x.value"
+    values = _decode(fd, matched, raw)
     if fd.dynamic_name:
         # P7: qualifier tail becomes the field name -> closed-form MapType column
-        tails = F.transform(matched, lambda c: c["qualifier"].substr(F.lit(len(fd.qualifier) + 1), F.length(c["qualifier"])))
+        tails = F.expr(f"transform({matched}, x -> substr(x.qualifier,"
+                       f" {len(fd.qualifier) + 1}, length(x.qualifier)))")
         return F.map_from_arrays(tails, values).alias(fd.name_stem)
     return values.alias(fd.name or "_positional")
 
 
-def field_exprs(fd: FieldDef, cells_arr: Column) -> list[Column]:
+def field_exprs(fd: FieldDef, cells: str) -> list[Column]:
     """Compile one FieldDef into its output column(s).  Normally one column;
     P8 positional output fields (``outputFields: [a,"",c]``,
     ExtractHBaseCellsBuilder.java:210-221) expand the qualifier-sorted
     extracted array into one column per non-empty name — the i-th value
     feeds the i-th name, empty names skip that position."""
-    base = field_expr(fd, cells_arr)
+    base = field_expr(fd, cells)
     if not fd.output_fields:
         return [base]
     if not fd.wildcard:
@@ -290,27 +268,16 @@ def row_documents(cells: DataFrame, conf: IndexerConf) -> DataFrame:
 
     reskey = _resolution_key(conf)
     if all(not fd.wildcard for fd in conf.fields):
-        # compiled from SQL text, ONE parse per expression (r10 #3): the
-        # Column-built version cost ~2.5k py4j round trips per cold compile
-        # (aggs ~730, decode projections ~1.8k — decode_double alone is
-        # ~360 calls).  Fields with no SQL form (custom mappers,
-        # bigdecimal) fall back to the Column path per field; the parsed
-        # trees are plan-identical (tests/test_sqltext.py + plan snapshots).
         def build() -> tuple:
             aggs = [
                 F.expr(
-                    f"max(CASE WHEN ((family = {qlit(fd.family)})"
-                    f" AND (qualifier = {qlit(fd.qualifier)}))"
+                    f"max(CASE WHEN {_target_sql(fd.family, fd.qualifier, False)}"
                     f" THEN struct(ts, value) END)"
                 ).alias(f"_c{i}")
                 for i, fd in enumerate(conf.fields)
             ]
-            cols = id_cols()
-            for i, fd in enumerate(conf.fields):
-                ds = _decode_sql(fd, f"_c{i}.value")
-                cols.append(
-                    F.expr(ds).alias(fd.name) if ds is not None
-                    else _decode(fd, F.col(f"_c{i}")["value"]).alias(fd.name))
+            cols = id_cols() + [_decode(fd, f"_c{i}.value").alias(fd.name)
+                                for i, fd in enumerate(conf.fields)]
             return aggs, cols
 
         aggs, cols = memo(("row_docs_exact", conf, reskey), build)
@@ -319,7 +286,7 @@ def row_documents(cells: DataFrame, conf: IndexerConf) -> DataFrame:
     latest = latest_cells(put_cells)
     agg, cols = memo(("row_docs_wild", conf, reskey), lambda: (
         F.collect_list(F.struct("family", "qualifier", "value")).alias("_cells"),
-        id_cols() + [c for fd in conf.fields for c in field_exprs(fd, F.col("_cells"))],
+        id_cols() + [c for fd in conf.fields for c in field_exprs(fd, "_cells")],
     ))
     return latest.groupBy("table", "row").agg(agg).select(*cols)
 
@@ -346,7 +313,7 @@ def column_documents(cells: DataFrame, conf: IndexerConf) -> DataFrame:
             fmt = uk.format_row_hex if conf.unique_key_formatter == "hex" else uk.format_row_string
             cols.append(fmt(F.col("family")).alias(conf.column_family_field))
         # evaluate every field def against the single cell
-        single = F.array(F.struct("family", "qualifier", "value"))
+        single = "array(struct(family, qualifier, value))"
         for fd in conf.fields:
             if fd.output_fields:
                 # per-cell doc: only position 0 can ever match

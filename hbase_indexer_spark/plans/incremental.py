@@ -28,12 +28,13 @@ from hbase_indexer_spark.config.indexer_conf import (
 )
 from hbase_indexer_spark.operators.extraction import (
     DELETE_OPS,
-    cell_matches,
     column_documents,
     keyvalue_id_expr,
     latest_cells,
+    qlit,
     row_documents,
     table_predicate,
+    target_match_sql,
 )
 from hbase_indexer_spark.functions.colmemo import memo
 from hbase_indexer_spark.sinks.index_store import IndexStore
@@ -74,8 +75,9 @@ def gate_events(events: DataFrame, conf: IndexerConf,
         if subscription_ts is None else
         table_predicate(conf, F.col("table"))
         & (F.col("event_ts") >= F.lit(subscription_ts)),
-        cell_matches(conf, F.col("family"), F.col("qualifier"))
-        | F.col("op").isin(*DELETE_OPS),
+        # deletes are always relevant (Indexer.java:297-311)
+        F.expr(f"({target_match_sql(conf)}"
+               f" OR (op IN ({', '.join(map(qlit, DELETE_OPS))})))"),
     ))
     return events.filter(route).filter(relevant)
 

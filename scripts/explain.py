@@ -41,6 +41,28 @@ CHECKS = {
         [r"partial_max"],
         [r"SortMergeJoin", r"hashpartitioning.*hashpartitioning", *NO_PYTHON],
     ),
+    # wildcard and per-cell extraction: the cell selection (array_sort over
+    # a filter lambda) and the decode stay Catalyst expressions
+    "column_index_orders_hex": (
+        [r"partial_max", r"array_sort\(filter\("],
+        [r"SortMergeJoin", *NO_PYTHON],
+    ),
+    "prefix_values": (
+        [r"partial_collect_list", r"array_sort\(filter\("],
+        [r"SortMergeJoin", *NO_PYTHON],
+    ),
+    "prefix_qualifiers": (
+        [r"partial_collect_list", r"array_sort\(filter\("],
+        [r"SortMergeJoin", *NO_PYTHON],
+    ),
+    "dynamic_fields": (
+        [r"partial_collect_list", r"map_from_arrays\(", r"array_sort\(filter\("],
+        [r"SortMergeJoin", *NO_PYTHON],
+    ),
+    "positional_fields": (
+        [r"partial_collect_list", r"element_at\(transform\(", r"array_sort\(filter\("],
+        [r"SortMergeJoin", *NO_PYTHON],
+    ),
     "stream_static_join": (
         [r"BroadcastHashJoin"],
         [r"SortMergeJoin"],

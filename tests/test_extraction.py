@@ -10,8 +10,10 @@ from hbase_indexer_spark.functions import bytes_codec as bc
 from hbase_indexer_spark.operators.extraction import (
     column_documents,
     latest_cells,
+    qlit,
     row_documents,
 )
+from hbase_indexer_spark.plans.batch import build_index
 
 CELL_SCHEMA = (
     "table string, row string, family string, qualifier string, "
@@ -47,6 +49,42 @@ def test_single_cell_and_int_decode(spark):
     out = {r["id"]: r for r in row_documents(df, conf).collect()}
     assert out["r1"]["name_s"] == "alice" and out["r1"]["age_i"] == 30
     assert out["r2"]["name_s"] == "bob" and out["r2"]["age_i"] is None
+
+
+def test_qlit_escapes_quotes_and_backslashes(spark):
+    assert qlit("a'b") == "'a''b'"
+    assert qlit("plain") == "'plain'"
+    # Spark's parser unescapes backslash sequences inside literals: every
+    # family, qualifier and prefix must still parse back to itself
+    probes = ["a'b", "plain", "a\\b", "x\\'y", "tail\\", "\\\\n", "'"]
+    row = spark.range(1).select(
+        *[F.expr(qlit(s)).alias(f"p{i}") for i, s in enumerate(probes)]).first()
+    assert [row[f"p{i}"] for i in range(len(probes))] == probes
+
+
+def test_backslash_targets_match_only_their_own_cells(spark):
+    # "a\b" (backslash) must not match "a\x08" (what an unescaped '\b'
+    # literal parses to), and the prefix "t\" must not break the parse
+    df = cells_df(spark, [
+        put("r1", "c\\f", "a\\b", "hit"),
+        put("r1", "c\\f", "a\x08", "backspace"),
+        put("r1", "c\\f", "t\\1", "p1"),
+        put("r1", "c\\f", "t1", "no-backslash"),
+        put("r1", "cf", "a\\b", "other-family"),
+    ])
+    exact = {"name": "exact_s", "value": "c\\f:a\\b"}
+    wild = {"name": "wild_ss", "value": "c\\f:t\\*"}
+    for mode, fields in (("row", [exact]), ("row", [exact, wild]),
+                         ("column", [exact, wild])):
+        conf = IndexerConf.from_dict({"table": "t", "mapping_type": mode,
+                                      "fields": fields})
+        docs = build_index(df, conf).collect()
+        got = sorted((name, d[name]) for d in docs for name in d.asDict()
+                     if name != "id" and d[name] is not None)
+        want = [("exact_s", "hit")]
+        if wild in fields:
+            want.append(("wild_ss", "p1" if mode == "column" else ["p1"]))
+        assert got == sorted(want), (mode, fields, got)
 
 
 def test_irrelevant_rows_produce_no_doc(spark):

@@ -203,14 +203,12 @@ def test_kite_command_translations():
 def test_bytes_type_passthrough_roundtrip(spark):
     """type byte[] -> 'bytes' identity decode (ExtractHBaseCellsBuilder
     .java:147-155): the raw cell bytes survive for downstream commands."""
-    from hbase_indexer_spark.functions.bytes_codec import (
-        decode_bytes,
-        encode_bytes,
-    )
+    from hbase_indexer_spark.functions.bytes_codec import decode_sql, encode_bytes
     import pyspark.sql.functions as F
 
     df = spark.createDataFrame([(b"\x00\x01\xff",)], "b binary")
-    out = df.select(decode_bytes(encode_bytes(F.col("b"))).alias("b"))
+    assert decode_sql("bytes", "b") == "b"
+    out = df.select(encode_bytes(F.col("b")).alias("b"))
     assert out.collect()[0]["b"] == b"\x00\x01\xff"
 
 
