@@ -401,7 +401,7 @@ def q_incremental_row_index_bucketed(spark: SparkSession, sf_dir: str) -> DataFr
 def q_incremental_column_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-mode incremental path (A2, F4, K8 delete-by-query): one doc
     per (row, family, qualifier) cell, delete_row events wipe a row's docs
-    via predicate delete."""
+    via an anti-join delete."""
     _ensure_session_confs(spark)
     from hbase_indexer_spark.plans.incremental import IncrementalIndexer
     from hbase_indexer_spark.sources.fixtures import event_cells

@@ -36,6 +36,18 @@ _GUARD = threading.Lock()
 _ACTIVE_ATTR = "_hbis_tuning_active"
 
 
+def _widths(conf, batch_rows: int) -> tuple[int, int] | None:
+    """(session width, tuned width), or None when the block is a no-op."""
+    try:
+        sess_parts = int(conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return None
+    parts = max(MIN_PARTITIONS,
+                min(sess_parts, batch_rows // ROWS_PER_PARTITION))
+    return None if parts >= sess_parts else (sess_parts, parts)
+
+
+@contextlib.contextmanager
 def small_batch_tuning(spark, batch_rows: int):
     """Context manager: inside the block, shuffles are sized to
     ``batch_rows`` (``rows // 50k`` clamped to ``[4, session setting]``)
@@ -43,36 +55,39 @@ def small_batch_tuning(spark, batch_rows: int):
     already warrants the session width, when the session's width is not
     a plain integer (e.g. ``auto`` on platforms with adaptive defaults),
     or when another tuning block is already active on this context (see
-    the ownership contract above)."""
+    the ownership contract above).  Everything is decided on entry, not
+    when the block is built."""
     conf = spark.conf
-    try:
-        sess_parts = int(conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return contextlib.nullcontext()
-    parts = max(MIN_PARTITIONS,
-                min(sess_parts, batch_rows // ROWS_PER_PARTITION))
-    if parts >= sess_parts:
-        return contextlib.nullcontext()
+    if _widths(conf, batch_rows) is None:
+        yield
+        return
     sc = spark.sparkContext
-
-    @contextlib.contextmanager
-    def tuned():
+    owner = False
+    restore: dict[str, str] = {}
+    try:
         with _GUARD:
-            nested = bool(sc.__dict__.get(_ACTIVE_ATTR))
-            if not nested:
+            # a nested block is a no-op: the outer owner's width stays
+            owner = not sc.__dict__.get(_ACTIVE_ATTR)
+            if owner:
                 sc.__dict__[_ACTIVE_ATTR] = True
-        if nested:
-            # an outer block owns the width: don't stack conf writes
-            yield
-            return
-        prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-            sc.__dict__[_ACTIVE_ATTR] = False
-
-    return tuned()
+        # re-read once this block owns the width: another block may have
+        # closed since the check above, and only the owner's read is
+        # guaranteed to see the session's own width
+        widths = _widths(conf, batch_rows) if owner else None
+        if widths is not None:
+            sess_parts, parts = widths
+            restore = {
+                "spark.sql.adaptive.enabled":
+                    conf.get("spark.sql.adaptive.enabled", "true"),
+                "spark.sql.shuffle.partitions": str(sess_parts),
+            }
+            conf.set("spark.sql.adaptive.enabled", "false")
+            conf.set("spark.sql.shuffle.partitions", str(parts))
+        yield
+    finally:
+        if owner:
+            try:
+                for k, v in restore.items():
+                    conf.set(k, v)
+            finally:
+                sc.__dict__[_ACTIVE_ATTR] = False

@@ -305,12 +305,11 @@ def column_documents(cells: DataFrame, conf: IndexerConf) -> DataFrame:
         ]
         if conf.table_name_field:
             cols.append(F.col("table").alias(conf.table_name_field))
+        # P13 row/family injection, formatted like the id parts
+        fmt = uk.row_formatter(conf.unique_key_formatter)
         if conf.row_field:
-            # P13 row injection, formatted like the id parts
-            fmt = uk.format_row_hex if conf.unique_key_formatter == "hex" else uk.format_row_string
             cols.append(fmt(F.col("row")).alias(conf.row_field))
         if conf.column_family_field:
-            fmt = uk.format_row_hex if conf.unique_key_formatter == "hex" else uk.format_row_string
             cols.append(fmt(F.col("family")).alias(conf.column_family_field))
         # evaluate every field def against the single cell
         single = "array(struct(family, qualifier, value))"

@@ -19,6 +19,8 @@ the batch (semi join), so work is O(batch), not O(table).
 
 from __future__ import annotations
 
+from collections import deque
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,10 +38,15 @@ from hbase_indexer_spark.operators.extraction import (
     table_predicate,
     target_match_sql,
 )
+from hbase_indexer_spark.functions import unique_key as uk
 from hbase_indexer_spark.functions.colmemo import memo
 from hbase_indexer_spark.sinks.index_store import IndexStore
 
 CELL_COLS = ["table", "row", "family", "qualifier", "ts", "op", "value"]
+
+# IncrementalIndexer.metrics_log keeps this many most recent batch records:
+# a forever-running stream must hold bounded driver state
+METRICS_LOG_MAX = 1000
 
 
 def _observed_adds(obs) -> int:
@@ -57,14 +64,27 @@ def _observed_adds(obs) -> int:
 
 def _run_concurrently(*jobs) -> None:
     """Run independent Spark actions on sibling threads (Spark's scheduler
-    interleaves their stages across the executor pool).  Exceptions
-    propagate; all jobs are awaited."""
-    import concurrent.futures
+    interleaves their stages across the executor pool).  The threads
+    inherit the caller's local properties, so their jobs keep the caller's
+    job group and description.  All jobs are awaited; the first failure
+    propagates."""
+    from pyspark import InheritableThread
 
-    with concurrent.futures.ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futures = [pool.submit(j) for j in jobs]
-        for f in futures:
-            f.result()
+    errors: list[BaseException] = []
+
+    def run(job) -> None:
+        try:
+            job()
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [InheritableThread(target=run, args=(j,)) for j in jobs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
 
 
 def gate_events(events: DataFrame, conf: IndexerConf,
@@ -184,23 +204,15 @@ class IncrementalIndexer:
 
     def __init__(self, spark: SparkSession, conf: IndexerConf, state_path: str,
                  index_path: str, subscription_ts: int | None = None,
-                 n_buckets: int | None = None,
-                 delete_inlist_max: int = 1000):
+                 n_buckets: int | None = None):
         """``n_buckets``: when set, state and index use the bucketed
         copy-on-write store (BucketedIndexStore) — per-batch I/O bounded by
         touched buckets instead of table size.  This is the 100 TB
         configuration; the default plain store is simpler and fine for
-        small views.
-
-        ``delete_inlist_max``: column-mode delete-by-query scopes at or
-        below this many distinct values are collected into literal IN-list
-        predicates (scan-prunable); above it they stay distributed and are
-        applied as anti-joins — a WAL batch carrying 100k row-deletes never
-        materializes on the driver or in the plan."""
+        small views."""
         self.spark = spark
         self.conf = conf
         self.subscription_ts = subscription_ts
-        self.delete_inlist_max = delete_inlist_max
         self.bucketed = n_buckets is not None
         if self.bucketed:
             from hbase_indexer_spark.sinks.bucket_store import BucketedIndexStore
@@ -225,7 +237,7 @@ class IncrementalIndexer:
         # .java:48-126) — docs_upserted is collected via `observe`, so it
         # costs no extra action
         self.metrics: dict = {}
-        self.metrics_log: list[dict] = []
+        self.metrics_log: deque[dict] = deque(maxlen=METRICS_LOG_MAX)
 
     # -- ROW mode ---------------------------------------------------------
 
@@ -327,11 +339,8 @@ class IncrementalIndexer:
                                  F.col("qualifier")).alias(conf.unique_key_field)
             ]
             if conf.row_field:
-                from hbase_indexer_spark.functions import unique_key as uk
-
-                fmt_row = (uk.format_row_hex if conf.unique_key_formatter == "hex"
-                           else uk.format_row_string)
-                out.append(fmt_row(F.col("row")).alias(conf.row_field))
+                out.append(uk.row_formatter(conf.unique_key_formatter)(
+                    F.col("row")).alias(conf.row_field))
             return out
 
         del_id_cols = memo(("del_id_cols", conf), build_del_id_cols)
@@ -339,75 +348,27 @@ class IncrementalIndexer:
             .select(*del_id_cols)
         # delete_row / delete_family -> delete-by-query (K8) against the
         # configured row/cf fields; missing config = warn & skip, matching
-        # Indexer.java:404-410,420-426
-        preds: list[Column] = []
+        # Indexer.java:404-410,420-426.  The delete sets stay distributed:
+        # the store applies them as anti-joins, so a WAL batch carrying
+        # 100k row-deletes never materializes on the driver or in the plan.
         delete_match: list[DataFrame] | None = None
         delete_scope: DataFrame | None = None
         if conf.row_field:
-            from hbase_indexer_spark.functions import unique_key as uk
-
             # the row/cf fields hold FORMATTED values (P13) — format the
             # raw cell values the same way before comparing
-            fmt = (uk.format_row_hex if conf.unique_key_formatter == "hex"
-                   else uk.format_row_string)
-            dbq = batch_cells.filter(
-                F.col("op").isin("delete_row", "delete_family"))
-            row_dels_df = (
-                dbq.filter(F.col("op") == "delete_row")
-                .select(fmt(F.col("row")).alias(conf.row_field)).distinct()
-            )
-            fam_dels_df = None
+            fmt = uk.row_formatter(conf.unique_key_formatter)
+            delete_match = [batch_cells.filter(F.col("op") == "delete_row")
+                            .select(fmt(F.col("row")).alias(conf.row_field))]
             if conf.column_family_field:
-                fam_dels_df = (
-                    dbq.filter(F.col("op") == "delete_family")
+                delete_match.append(
+                    batch_cells.filter(F.col("op") == "delete_family")
                     .select(fmt(F.col("row")).alias(conf.row_field),
-                            fmt(F.col("family")).alias(conf.column_family_field))
-                    .distinct()
-                )
-            # one small count decides the shape: collected IN-lists make
-            # literal predicates the scan can prune on, but their size is
-            # driver- and plan-bounded, so past delete_inlist_max the
-            # delete set stays distributed (anti-join, K8 at WAL scale)
-            counts = dbq.agg(
-                F.countDistinct(
-                    F.when(F.col("op") == "delete_row", F.col("row"))
-                ).alias("nr"),
-                F.countDistinct(
-                    F.when(F.col("op") == "delete_family",
-                           F.concat_ws("\x00", "row", "family"))
-                ).alias("nf"),
-            ).collect()[0]
-            n_row_dels = counts["nr"]
-            n_fam_dels = counts["nf"] if fam_dels_df is not None else 0
-            if n_row_dels + n_fam_dels <= self.delete_inlist_max:
-                if n_row_dels:
-                    row_dels = sorted(r[0] for r in row_dels_df.collect())
-                    preds.append(F.col(conf.row_field).isin(row_dels))
-                if n_fam_dels:
-                    fam_dels = sorted(
-                        (r[0], r[1]) for r in fam_dels_df.collect())
-                    pair = F.concat_ws(
-                        "\x00", F.col(conf.row_field),
-                        F.col(conf.column_family_field))
-                    preds.append(pair.isin(["\x00".join(p) for p in fam_dels]))
-                self.metrics["delete_path"] = "inlist"
-            else:
-                delete_match = []
-                if n_row_dels:
-                    delete_match.append(row_dels_df)
-                if n_fam_dels:
-                    delete_match.append(fam_dels_df)
-                self.metrics["delete_path"] = "join"
-            # every delete-by-query above is row-scoped: the touched row
-            # set bounds it, so a row-bucketed store prunes to those
-            # buckets.  Built distributively — never collected.
-            if n_row_dels + n_fam_dels:
-                scope = row_dels_df.select(
-                    F.col(conf.row_field).alias("rowval"))
-                if n_fam_dels:
-                    scope = scope.unionByName(fam_dels_df.select(
-                        F.col(conf.row_field).alias("rowval")))
-                delete_scope = scope.distinct()
+                            fmt(F.col("family")).alias(conf.column_family_field)))
+            # every delete-by-query above is row-scoped: the applied deletes'
+            # rows bound it, so a row-bucketed store prunes to those buckets
+            delete_scope = delete_match[0]
+            for m in delete_match[1:]:
+                delete_scope = delete_scope.unionByName(m.select(conf.row_field))
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -415,8 +376,7 @@ class IncrementalIndexer:
         # (union_adds_observed) — observing the adds subtree hangs obs.get
         # on all-delete batches (AQE prunes the empty union child)
         self.index.merge(self.spark, adds=adds, delete_ids=del_ids,
-                         delete_predicates=preds or None,
-                         delete_match=delete_match or None,
+                         delete_match=delete_match,
                          delete_scope=delete_scope,
                          adds_observation=obs)
         self.metrics["docs_upserted"] = _observed_adds(obs)
@@ -425,19 +385,20 @@ class IncrementalIndexer:
 
     def process_batch(self, batch: DataFrame, batch_id: int | None = None,
                       precount: int | None = None) -> None:
-        # cache the gated batch: it is consumed several times per micro-batch
-        # (tombstone masks, puts, touched-row set, delete ids) and would
-        # otherwise re-run the source scan for each consumer
-        batch = gate_events(batch, self.conf, self.subscription_ts).cache()
+        batch = gate_events(batch, self.conf, self.subscription_ts)
+        if precount is None:
+            # cache the gated batch: it is consumed several times per
+            # micro-batch (tombstone masks, puts, touched-row set, delete
+            # ids) and would otherwise re-run the source scan for each
+            # consumer; the count below (K3-analog counter) materializes it
+            batch = batch.cache()
+        # else the caller already knows the gated size (replay's one-pass
+        # chunk census) and the batch filters the caller's materialized
+        # cache, so its consumers re-read that cache: a second, lazily built
+        # cache costs more jobs than it saves, since under AQE every scan of
+        # an unbuilt cache submits its own build job
         try:
-            if precount is None:
-                n = batch.count()  # materializes the cache; K3-analog counter
-            else:
-                # caller already knows the gated size (replay's one-pass
-                # chunk census) — skip the count job; the cache then
-                # materializes inside the publish jobs (the block manager
-                # dedups concurrent computes of a cached partition)
-                n = precount
+            n = batch.count() if precount is None else precount
             self.metrics = {"batch_id": batch_id, "relevant_events": n,
                             "docs_upserted": None}
             if n == 0:

@@ -244,8 +244,7 @@ class BucketedIndexStore:
         prunes to those buckets like any keyed change.
 
         ``delete_match``: set-oriented delete-by-query (see
-        IndexStore.merge) — anti-join on each frame's columns; the path for
-        delete sets too large for a collected IN-list.
+        IndexStore.merge) — anti-join on each frame's columns.
         """
         if self.current_version() < 0:
             if adds is not None:

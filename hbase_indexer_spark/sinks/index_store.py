@@ -175,9 +175,9 @@ class IndexStore:
 
         ``delete_match``: the set-oriented form of delete-by-query — each
         frame's columns name index fields, and any index row equal to one
-        of the frame's rows on ALL those columns is deleted (broadcast
-        anti-join).  Callers use this instead of a ``delete_predicates``
-        IN-list when the value set is too large to collect to the driver.
+        of the frame's rows on ALL those columns is deleted (anti-join).
+        The delete set stays distributed, so its size is bounded by
+        neither the driver nor the plan.
 
         ``delete_scope`` is accepted for signature parity with the bucketed
         store (which uses it to prune delete-by-query I/O); the plain store
@@ -203,9 +203,9 @@ class IndexStore:
             for pred in delete_predicates:
                 out = out.filter(~F.coalesce(pred, F.lit(False)))
         if delete_match:
-            # no broadcast hint: the match set is unbounded by contract
-            # (that's why it isn't an IN-list) — AQE broadcasts it when the
-            # runtime size allows and falls back to a shuffle join when not
+            # no broadcast hint: the match set is unbounded by contract —
+            # AQE broadcasts it when the runtime size allows and falls back
+            # to a shuffle join when not
             for m in delete_match:
                 out = out.join(m.distinct(), on=list(m.columns), how="left_anti")
         if replace_keys is not None:

@@ -190,71 +190,141 @@ def test_redelivered_batch_is_idempotent(spark, tmp_path):
             for r in ix.index.read(spark).collect()} == expect
 
 
+@pytest.mark.parametrize("n_rows,row_dels,fam_dels", [
+    pytest.param(8, [0, 1], [2, 3], id="4_deleted_of_8"),
+    pytest.param(40, range(1, 40, 2), range(0, 40, 4), id="30_deleted_of_40"),
+])
 @pytest.mark.parametrize("n_buckets", [None, 8])
-def test_column_mode_large_delete_batch_uses_join_path(spark, tmp_path, n_buckets):
-    """K8 at WAL scale: a batch whose distinct delete-by-query scope
-    exceeds delete_inlist_max must NOT be collected into IN-list literals —
-    the delete set stays distributed (anti-join), on both store kinds, and
-    the merged result is identical to the small-batch semantics."""
+def test_column_mode_delete_by_query(spark, tmp_path, n_buckets, n_rows,
+                                     row_dels, fam_dels):
+    """K8: delete_row / delete_family batches delete every doc of their
+    rows (the family delete on the configured cf field) and nothing else,
+    on both store kinds; the delete sets reach the store as anti-join
+    frames whatever their size."""
     conf = IndexerConf.from_dict(COL_CONF)
-    n_rows = 40
     puts = [ev(i + 1, f"r{i:03d}", "m1", f"v{i}") for i in range(n_rows)]
-    # delete_row for the odd rows, delete_family for rows 0/4/8 (mod 4)
     dels = [ev(n_rows + i + 1, f"r{i:03d}", None, op="delete_row")
-            for i in range(n_rows) if i % 2 == 1]
+            for i in row_dels]
     dels += [ev(2 * n_rows + i + 1, f"r{i:03d}", None, op="delete_family")
-             for i in range(n_rows) if i % 4 == 0]
+             for i in fam_dels]
     ix = IncrementalIndexer(
         spark, conf,
-        state_path=str(tmp_path / f"state{n_buckets}"),
-        index_path=str(tmp_path / f"index{n_buckets}"),
+        state_path=str(tmp_path / "state"),
+        index_path=str(tmp_path / "index"),
         n_buckets=n_buckets,
-        delete_inlist_max=5,          # force the distributed path
     )
     ix.process_batch(spark.createDataFrame(puts, EVENT_SCHEMA))
     ix.process_batch(spark.createDataFrame(dels, EVENT_SCHEMA))
-    assert ix.metrics["delete_path"] == "join"
-    survivors = {r["id"] for r in ix.index.read(spark).collect()}
-    assert survivors == {f"r{i:03d}-info-m1" for i in range(n_rows)
-                        if i % 2 == 0 and i % 4 != 0}
+    deleted = set(row_dels) | set(fam_dels)
+    assert {r["id"] for r in ix.index.read(spark).collect()} == {
+        f"r{i:03d}-info-m1" for i in range(n_rows) if i not in deleted}
 
-    # same batches under the default (IN-list) threshold -> same result
-    ix2 = IncrementalIndexer(
-        spark, conf,
-        state_path=str(tmp_path / f"state2{n_buckets}"),
-        index_path=str(tmp_path / f"index2{n_buckets}"),
+
+@pytest.mark.parametrize("n_buckets", [None, 8])
+def test_column_mode_family_delete_without_cf_field_is_skipped(
+        spark, tmp_path, n_buckets):
+    """Indexer.java:420-426: with no column_family_field configured, a
+    delete_family cannot be expressed as a query and leaves docs as they
+    are; a delete_row in the same batch still applies."""
+    conf_dict = {k: v for k, v in COL_CONF.items()
+                 if k != "column_family_field"}
+    ix = IncrementalIndexer(
+        spark, IndexerConf.from_dict(conf_dict),
+        state_path=str(tmp_path / "state"),
+        index_path=str(tmp_path / "index"),
         n_buckets=n_buckets,
     )
-    ix2.process_batch(spark.createDataFrame(puts, EVENT_SCHEMA))
-    ix2.process_batch(spark.createDataFrame(dels, EVENT_SCHEMA))
-    assert ix2.metrics["delete_path"] == "inlist"
-    assert {r["id"] for r in ix2.index.read(spark).collect()} == survivors
+    ix.process_batch(spark.createDataFrame(
+        [ev(1, "r1", "m1", "a"), ev(2, "r2", "m1", "b"),
+         ev(3, "r3", "m1", "c")], EVENT_SCHEMA))
+    ix.process_batch(spark.createDataFrame(
+        [ev(4, "r1", None, op="delete_family"),
+         ev(5, "r3", None, op="delete_row")], EVENT_SCHEMA))
+    assert {r["id"]: r["val"] for r in ix.index.read(spark).collect()} == {
+        "r1-info-m1": "a", "r2-info-m1": "b"}
 
 
-def test_delete_inlist_max_exact_boundary(spark, tmp_path):
-    """The IN-list/anti-join switch fires at EXACTLY delete_inlist_max
-    (r9, VERDICT r8 #9): a delete scope of size == max stays an IN-list
-    (<= comparison), size == max + 1 goes distributed — with identical
-    merged results either side of the boundary."""
+def test_column_mode_batch_without_deletes_rewrites_only_added_buckets(
+        spark, tmp_path):
+    """The delete-by-query frames and their row scope are passed on every
+    column batch; an empty scope must add no bucket, so a batch of puts
+    rewrites only the buckets of its rows (read from the manifest)."""
     conf = IndexerConf.from_dict(COL_CONF)
-    puts = [ev(i + 1, f"r{i:03d}", "m1", f"v{i}") for i in range(8)]
-    dels = [ev(100 + i, f"r{i:03d}", None, op="delete_row")
-            for i in range(4)]           # 4 distinct delete rows
+    ix = IncrementalIndexer(
+        spark, conf,
+        state_path=str(tmp_path / "state"),
+        index_path=str(tmp_path / "index"),
+        n_buckets=8,
+    )
+    ix.process_batch(spark.createDataFrame(
+        [ev(i + 1, f"r{i:03d}", "m1", f"v{i}") for i in range(40)],
+        EVENT_SCHEMA))
+    before = ix.index._bucket_dirs()
+    assert len(before) == 8
+    ix.process_batch(spark.createDataFrame(
+        [ev(100, "r000", "m2", "new")], EVENT_SCHEMA))
+    after = ix.index._bucket_dirs()
+    b = spark.range(1).select(
+        ix.index.bucket_of(F.lit("r000")).alias("b")).first()["b"]
+    assert {k for k in after if after[k] != before[k]} == {b}
+    assert "r000-info-m2" in {r["id"] for r in ix.index.read(spark).collect()}
 
-    def run(max_, tag):
-        ix = IncrementalIndexer(
-            spark, conf,
-            state_path=str(tmp_path / f"s{tag}"),
-            index_path=str(tmp_path / f"i{tag}"),
-            delete_inlist_max=max_,
-        )
-        ix.process_batch(spark.createDataFrame(puts, EVENT_SCHEMA))
-        ix.process_batch(spark.createDataFrame(dels, EVENT_SCHEMA))
-        return ix, {r["id"] for r in ix.index.read(spark).collect()}
 
-    at, surv_at = run(4, "at")           # scope == max -> IN-list
-    assert at.metrics["delete_path"] == "inlist"
-    below, surv_below = run(3, "below")  # scope == max + 1 -> anti-join
-    assert below.metrics["delete_path"] == "join"
-    assert surv_at == surv_below == {
-        f"r{i:03d}-info-m1" for i in range(4, 8)}
+def test_metrics_log_keeps_last_batches(spark, tmp_path, monkeypatch):
+    """A forever-running loop holds bounded driver state: the per-batch
+    metrics log keeps only the newest METRICS_LOG_MAX records."""
+    from hbase_indexer_spark.plans import incremental
+
+    monkeypatch.setattr(incremental, "METRICS_LOG_MAX", 3)
+    ix = IncrementalIndexer(
+        spark, IndexerConf.from_dict(ROW_CONF),
+        state_path=str(tmp_path / "state"),
+        index_path=str(tmp_path / "index"),
+    )
+    for i in range(5):
+        ix.process_batch(spark.createDataFrame(
+            [ev(i + 1, f"r{i}", "name", f"n{i}")], EVENT_SCHEMA), batch_id=i)
+    assert [m["batch_id"] for m in ix.metrics_log] == [2, 3, 4]
+
+
+def test_concurrent_publishes_keep_job_group(spark, tmp_path):
+    """Row mode publishes state and index from sibling threads; their jobs
+    must stay in the caller's job group so the caller can attribute (and
+    cancel) them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ix = IncrementalIndexer(
+        spark, IndexerConf.from_dict(ROW_CONF),
+        state_path=str(tmp_path / "state"),
+        index_path=str(tmp_path / "index"),
+    )
+    batch = spark.createDataFrame(
+        [ev(1, "r1", "name", "alice"), ev(2, "r2", "name", "bob")],
+        EVENT_SCHEMA)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("concurrent-publish", "process_batch")
+    try:
+        ix.process_batch(batch)
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert tracker.getJobIdsForGroup("concurrent-publish")
+
+
+def test_run_concurrently_awaits_all_and_propagates_failure(spark):
+    from hbase_indexer_spark.plans.incremental import _run_concurrently
+
+    done = []
+
+    def fails():
+        raise ValueError("publish failed")
+
+    def slow_ok():
+        spark.range(10).count()
+        done.append(True)
+
+    with pytest.raises(ValueError, match="publish failed"):
+        _run_concurrently(fails, slow_ok)
+    assert done == [True]

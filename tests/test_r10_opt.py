@@ -1,6 +1,9 @@
 """Round-10 optimization guards: the grouped (distinct-token-set)
 prefix-filter machinery must be invisible in the produced pair set."""
 
+import pytest
+
+
 def test_prefix_filter_identical_sets_pair_at_exactly_1e6(spark):
     """Docs whose distinct token sets are equal (including permuted /
     repeated tokens) pair at exactly 1_000_000 — the same-set branch of
@@ -154,6 +157,65 @@ def test_tuning_non_integer_width_is_noop():
 
     with small_batch_tuning(_Spark(), 1):
         pass  # entered and exited without touching conf
+
+
+def test_tuning_block_built_inside_another_reads_width_on_entry(spark):
+    """A block built while another is open and entered after it closed
+    must tune against the session width and restore it — not the outer
+    block's temporary width (ADVICE: stale restore shrank the session)."""
+    from hbase_indexer_spark.functions.tuning import small_batch_tuning
+
+    sess = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        with small_batch_tuning(spark, 500_000):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "10"
+            inner = small_batch_tuning(spark, 1)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+        with inner:
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", sess)
+
+
+def test_tuning_failed_conf_write_releases_ownership():
+    """A conf write that raises on entry must release the ownership flag
+    and restore what was already written; otherwise every later block on
+    the context is a silent no-op.  Simulated with a stub session whose
+    shuffle-width write fails once."""
+    from hbase_indexer_spark.functions.tuning import small_batch_tuning
+
+    class _Conf:
+        def __init__(self):
+            self.vals = {"spark.sql.shuffle.partitions": "32",
+                         "spark.sql.adaptive.enabled": "true"}
+            self.fail_next_width_write = True
+
+        def get(self, k, d=None):
+            return self.vals.get(k, d)
+
+        def set(self, k, v):
+            if (k == "spark.sql.shuffle.partitions"
+                    and self.fail_next_width_write):
+                self.fail_next_width_write = False
+                raise RuntimeError("conf write failed")
+            self.vals[k] = v
+
+    class _Spark:
+        conf = _Conf()
+        sparkContext = type("_Context", (), {})()
+
+    spark = _Spark()
+    with pytest.raises(RuntimeError):
+        with small_batch_tuning(spark, 1):
+            pass  # pragma: no cover - entry raises
+    assert spark.conf.vals == {"spark.sql.shuffle.partitions": "32",
+                               "spark.sql.adaptive.enabled": "true"}
+    with small_batch_tuning(spark, 1):
+        assert spark.conf.vals == {"spark.sql.shuffle.partitions": "4",
+                                   "spark.sql.adaptive.enabled": "false"}
+    assert spark.conf.vals["spark.sql.shuffle.partitions"] == "32"
 
 
 # --- embedding LSH duplicate-vector grouping (r10) ------------------------
